@@ -1,7 +1,14 @@
 #!/bin/bash
-# Run a graft main (graft.Bench / graft.Verify / graft.ScaleUp) straight
-# from the compiled classes, bypassing sbt — lets measurements run while
-# sbt holds the project lock (test suite, compile). Compile first:
+# Run one of the five graft mains straight from the compiled classes,
+# bypassing sbt — lets measurements run while sbt holds the project lock
+# (test suite, compile). The mains, which share one session profile
+# (graft.util.Harness.session):
+#   graft.Bench    timed suite, one JSON summary line on stdout
+#   graft.Verify   <sfDir> <outDir>: per-query parquet + oracle_sql.json
+#   graft.RunOne   <query> [k=v ...]: one query with its rows
+#   graft.Explain  <query ...> [k=v ...]: formatted physical plans
+#   graft.ScaleUp  <srcDir> <outDir> <factor> [tables]: corpus replica
+# Compile first:
 #   sbt -batch compile
 # Env: SPARK_DRIVER_MEM (default 8g) and the usual SPARK_GRAFT_* knobs.
 set -euo pipefail

@@ -1,28 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.Harness
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") // bench contract: local[32]
-    // shuffle partitions track the data, not the core count: at the
-    // driver's sf0.1 the two coincide (32), but the sf10 replica measured
-    // q44/q45 spilling at 32 partitions — on a cluster this is the knob
-    // that scales with input size (or AQE's initialPartitionNum)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      // UI is off but the status stores still retain per-execution plan
-      // graphs/metrics; 90+ queries of big plans is real heap — keep the
-      // retention small, the bench never reads them back
-      .config("spark.sql.ui.retainedExecutions", "20")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Harness.quietLineageWarn() // deliberate releases, see Harness
-    graft.util.Checkpoints.arm() // harness-only transient registry
+    val spark = Harness.session(defaultCpus = 32) // bench contract: local[32]
     // warm up codegen/session machinery outside the timings
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
@@ -31,12 +12,7 @@ object Bench {
     // SPARK_GRAFT_REPS sets the rep count — batch queries always run at
     // least 2 and record the MIN (steady state; rep1 rides stderr and
     // rep1_total the summary), streaming queries run exactly REPS.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // qNN-prefix OR full-name match; bare startsWith would over-select
-    // now that three-digit queries exist ("q11" must not pull in q110+)
-    def selected(name: String): Boolean =
-      only.isEmpty || only.contains(name) || only.contains(name.split("_")(0))
+    val selected = Harness.selection()
     // the summary keys timings by qNN prefix (tail-window fit, below); a
     // duplicate prefix would silently drop a timing — fail BEFORE the
     // hours-long measurement, not after it
@@ -49,6 +25,17 @@ object Bench {
     graft.weather.WeatherQueries.bronzeEventsWindowed(spark, sfDir).count()
     def fmt(v: Double): String = // ROOT locale: "." decimal point always
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // one timed call of a query: a failure is never silent — it is named
+    // on stderr (class + first message line) and counted in n_failed
+    def runOk(label: String)(body: => Unit): Boolean =
+      try { body; true }
+      catch { case e: Throwable =>
+        val msg = String.valueOf(e.getMessage).linesIterator.nextOption()
+          .getOrElse("")
+        System.err.println(
+          s"[bench] failed $label: ${e.getClass.getName}: $msg")
+        false
+      }
     // pre-build the shared verified-pairs memo (feeds q45, q77, q103) so
     // the one-time artifact build isn't billed to whichever consumer the
     // string order runs first (q103 — r6 archived it at 38.7 s carrying
@@ -249,8 +236,7 @@ object Bench {
           val t0 = System.nanoTime()
           // a failing query records the -1.0 sentinel, never its elapsed
           // time — a broken query must not masquerade as a fast one
-          val ok = try { fn(spark, sfDir).count(); true }
-                   catch { case _: Throwable => false }
+          val ok = runOk(name)(fn(spark, sfDir).count())
           val sec = (System.nanoTime() - t0) / 1e9
           if (!ok) failed = true else recorded = math.min(recorded, sec)
           if (r == 1) rep1 = if (ok) sec else -1.0
@@ -260,7 +246,7 @@ object Bench {
           // accumulated debris — round 5 archived q81 at 63.5 s in-suite
           // vs 5.65 s isolated before this existed. Cross-query memo
           // caches (weather gold, shingle index, IVF centroids) survive.
-          graft.util.Harness.sweep(spark)
+          Harness.sweep(spark)
         }
         val last = if (failed) -1.0 else recorded
         // incremental per-query line on stderr: a mid-suite crash still
@@ -291,11 +277,10 @@ object Bench {
         // ends and the JVM's gc delta ride in the artifact)
         val l0 = loadAvg(); val g0 = gcSec()
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
+        val ok = runOk(s"${n}_isolated")(fn(spark, sfDir).count())
         val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         val gc = gcSec() - g0; val l1 = loadAvg()
-        graft.util.Harness.sweep(spark)
+        Harness.sweep(spark)
         System.err.println(s"[bench] ${n}_isolated ${fmt(sec)} " +
           s"load=${fmt(l0)}->${fmt(l1)} gc=${fmt(gc)}")
         n.split("_")(0) -> ((sec, l0, l1, gc))
@@ -313,14 +298,10 @@ object Bench {
     val streamTotal = results.collect {
       case (n, (v, _)) if isStreaming(n) && v >= 0 => v }.sum
     val batchTotal = total - streamTotal
-    // teardown BEFORE the summary so nothing can print after it: evict
-    // memoized/cached frames so nothing outlives the run
-    graft.weather.WeatherQueries.clear()
-    graft.operators.IngestOps.clear()
-    graft.operators.TextOps.clear()
-    graft.operators.VectorOps.clear()
-    graft.operators.Relational.clearGraph()
-    spark.catalog.clearCache()
+    // a failed query records -1 and drops out of every total: count it
+    val nFailed = results.values.count(_._1 < 0)
+    // teardown BEFORE the summary so nothing can print after it
+    Harness.teardown(spark)
     // the driver parses a ~2000-char TAIL window of stdout: at 159
     // queries even the qNN-prefix-keyed map is ~2.4 KB, pushing the
     // line's FRONT — "metric" and the total — out of the window, which
@@ -393,7 +374,7 @@ object Bench {
     // memo builds) and the machine-load/GC indicators make the summary
     // self-attributing: min-based totals that drift while gc/load sit
     // in band indict the plans; a drift that tracks load_end/gc does not
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"prewarm_lsh_pairs":${fmt(prewarmLsh)},"prewarm_kmv_table":${fmt(prewarmKmv)},"prewarm_typed_layout":${fmt(prewarmLayout)},"prewarm_ivf_index":${fmt(prewarmIvf)},"prewarm_zindex":${fmt(prewarmZ)},"prewarm_part_graph":${fmt(prewarmGraph)},"prewarm_weather_zserve":${fmt(prewarmWxZ)},"batch_total":${fmt(batchTotal)},"streaming_total":${fmt(streamTotal)},"rep1_total":${fmt(rep1Total)},"load_start":${fmt(loadStart)},"load_end":${fmt(loadAvg())},"gc_sec":${fmt(gcSec() - gcStart)},"isolated":$iso,"isolated_env":$isoEnv,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"prewarm_lsh_pairs":${fmt(prewarmLsh)},"prewarm_kmv_table":${fmt(prewarmKmv)},"prewarm_typed_layout":${fmt(prewarmLayout)},"prewarm_ivf_index":${fmt(prewarmIvf)},"prewarm_zindex":${fmt(prewarmZ)},"prewarm_part_graph":${fmt(prewarmGraph)},"prewarm_weather_zserve":${fmt(prewarmWxZ)},"batch_total":${fmt(batchTotal)},"streaming_total":${fmt(streamTotal)},"rep1_total":${fmt(rep1Total)},"load_start":${fmt(loadStart)},"load_end":${fmt(loadAvg())},"gc_sec":${fmt(gcSec() - gcStart)},"isolated":$iso,"isolated_env":$isoEnv,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Harness
 
 /** Bench-only single-query runner with visible ROWS: times one query at
   * full bench conditions and prints its result, so scale cross-checks
@@ -15,20 +15,8 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val q = args(0)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    args.drop(1).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      b.config(k, v)
-    }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Checkpoints.arm()
+    val spark = Harness.session(defaultCpus = 32,
+      confs = args.toSeq.drop(1).map(Harness.confArg))
     // SPARK_GRAFT_STAGE_METRICS=1: per-stage GC/spill/shuffle counters,
     // printed per rep — the attribution harness for wall-time outliers
     // (e.g. the r8 q141 237 s single-rep spike recorded as "OS-level");
@@ -75,7 +63,7 @@ object RunOne {
         sys.env.get("SPARK_GRAFT_OUT").foreach(out =>
           df.write.mode("overwrite").parquet(s"$out/$q.parquet"))
       }
-      graft.util.Harness.sweep(spark)
+      Harness.sweep(spark)
     }
     spark.stop()
   }

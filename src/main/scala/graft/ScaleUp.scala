@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.util.Harness
 
 /** Bench-only corpus scale-up: replicate the driver-generated sf0.1
   * tables `factor`× with referential-integrity-preserving key offsets, so
@@ -40,16 +41,10 @@ object ScaleUp {
       else None
     def wanted(t: String): Boolean = tableFilter.forall(_.contains(t))
     val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is TIMESTAMP(NANOS): read as long; the replica keeps it
-      // as plain INT64 nanos, which Tables.events handles identically
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // events.ts is TIMESTAMP(NANOS): read as long; the replica keeps it
+    // as plain INT64 nanos, which Tables.events handles identically
+    val spark = Harness.session(defaultCpus = 16,
+      confs = Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 
     def src(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")
     // the +r*STRIDE offset is collision-free only while every source key

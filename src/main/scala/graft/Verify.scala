@@ -1,40 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.util.Harness
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Harness.quietLineageWarn() // deliberate releases, see Harness
-    graft.util.Checkpoints.arm() // harness-only transient registry
+    val spark = Harness.session(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // builder-side convenience: SPARK_GRAFT_ONLY="q62,q34" limits the dump
     // to those queries (unset → all, which is what the driver runs)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    // qNN-prefix OR full-name match; bare startsWith would over-select
-    // now that three-digit queries exist ("q11" must not pull in q110+)
-    SparkEntry.queries
-      .filter { case (name, _) =>
-        only.isEmpty || only.contains(name) || only.contains(name.split("_")(0)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val selected = Harness.selection()
+    val chosen = SparkEntry.queries.filter { case (name, _) => selected(name) }
+    val failed = chosen.toSeq.flatMap { case (name, fn) =>
+      val ok = try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        false
       }
       // release this query's transients (result already written) so the
       // 90+-query dump doesn't accumulate suite-long debris — see Harness
-      graft.util.Harness.sweep(spark)
+      Harness.sweep(spark)
+      if (ok) None else Some(name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -51,13 +41,11 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // teardown: evict memoized/cached frames so nothing outlives the run
-    graft.weather.WeatherQueries.clear()
-    graft.operators.IngestOps.clear()
-    graft.operators.TextOps.clear()
-    graft.operators.VectorOps.clear()
-    graft.operators.Relational.clearGraph()
-    spark.catalog.clearCache()
+    Harness.teardown(spark)
+    // the run still exits 0 on failures (the driver reads the outputs);
+    // the tally is the one line that says whether any query failed
+    System.err.println(s"[verify] failed ${failed.size}/${chosen.size}" +
+      (if (failed.isEmpty) "" else failed.sorted.mkString(": ", ", ", "")))
     spark.stop()
   }
 }

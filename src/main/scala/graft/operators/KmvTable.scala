@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.sources.Tables
+import graft.util.Md5
 
 /** Durable, INCREMENTALLY-maintained daily sketch table — the profiler
   * shape the q139/q146/q148/q161 family's 100 TB posture keeps
@@ -177,9 +178,7 @@ object KmvTable {
 
   private[graft] def tableRoot(spark: SparkSession, dir: String): String =
     spark.conf.getOption("spark.graft.kmv.tableDir").getOrElse {
-      val id = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      sys.props("java.io.tmpdir") + s"/graft_kmv_table/$id"
+      sys.props("java.io.tmpdir") + s"/graft_kmv_table/${Md5.hex(dir)}"
     }
 
   private[graft] case class PartFile(

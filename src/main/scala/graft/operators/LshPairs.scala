@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.util.Md5
 
 /** The DURABLE verified-pairs store (r15 verdict #1): the MinHash+LSH
   * verified near-duplicate pairs that q45 declares and q77/q103/q144
@@ -72,15 +73,11 @@ object LshPairs {
   private val rootLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   private[graft] def root(spark: SparkSession, dir: String): String =
     spark.conf.getOption("spark.graft.lshpairs.dir")
-      .map(base => s"$base/${md5hex(dir).take(8)}")
+      .map(base => s"$base/${Md5.hex(dir).take(8)}")
       .getOrElse(sys.props("java.io.tmpdir") +
-        s"/graft_lsh_pairs/${md5hex(dir)}")
+        s"/graft_lsh_pairs/${Md5.hex(dir)}")
 
   private def feedOf(dir: String): String = s"$dir/documents.parquet"
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.plans.{JoinSynopsis, SynopsisStats, ValueSynopsis}
 import graft.sources.Tables
+import graft.util.Md5
 
 /** q169 — a DECLARED query whose PLAN comes from the statistics
   * catalog, end-to-end (r11 verdict #1): Catalyst's own cost-based
@@ -133,13 +134,9 @@ object StatsJoin {
   private[graft] def statsCboOn(spark: SparkSession): Boolean =
     !spark.conf.getOption("spark.graft.stats.cbo").contains("false")
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   private def layoutRoot(spark: SparkSession, dir: String): String =
     spark.conf.getOption("spark.graft.evlayout.dir")
-      .getOrElse(sys.props("java.io.tmpdir") + s"/graft_ev_layout/${md5hex(dir)}")
+      .getOrElse(sys.props("java.io.tmpdir") + s"/graft_ev_layout/${Md5.hex(dir)}")
 
   private def esc(v: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(v)
@@ -418,9 +415,7 @@ object StatsJoin {
     regSyncs.incrementAndGet()
     val partitions = ensureTypedLayout(spark, dir)
     val root = layoutRoot(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val id8 = md5hex(dir).take(8)
+    val id8 = Md5.hex(dir).take(8)
     val types = partitions.keysIterator.map(_._1).toSeq.distinct.sorted
     require(types.map(safe).distinct.size == types.size,
       s"event types collide after identifier sanitization: $types")
@@ -562,7 +557,7 @@ object StatsJoin {
     }
     val partitions = ensureTypedLayout(spark, dir)
     val root = layoutRoot(spark, dir)
-    val id8 = md5hex(dir).take(8)
+    val id8 = Md5.hex(dir).take(8)
     val t = KmvTable.maintain(spark, dir)
     val keySyns = JoinSynopsis.fromTable(spark, dir, Some(t))
     val valSyns = ValueSynopsis.fromTable(spark, dir, Some(t))

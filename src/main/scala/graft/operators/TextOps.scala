@@ -1966,27 +1966,13 @@ object TextOps {
   // extraction binds the symbol array as a lambda argument (the q141
   // lesson — an outer reference would re-split per pair).
   // ------------------------------------------------------------------
-  /** The BPE training loop, parameterized by round count so [[q143BpeMerges]]
-    * (5 rounds, the oracle gate) and [[graft.BpeDepth]] (the deep
-    * per-round cost-curve measurement) share ONE implementation.
-    *
-    * `audit = true` (the depth driver) additionally: (a) materializes
-    * each round's dictionary eagerly and unpersists its predecessor --
-    * a 5-round chain can lean on the harness sweep, a deep-merge regime
-    * cannot pile up round caches; (b) hands each round's wall seconds,
-    * merged pair and post-merge weighted symbol count to `onRound`, and
-    * asserts the structural invariant of greedy BPE that the weighted
-    * symbol count drops by EXACTLY the merged pair's frequency (each
-    * merge occurrence collapses two symbols into one). The companion
-    * invariant -- max-pair frequency monotone non-increasing, because
-    * any post-merge pair occurrence maps injectively to a pre-merge
-    * occurrence of an overlapping pair -- is checked by the caller over
-    * the returned merge table.
+  /** The BPE training loop, parameterized by round count so
+    * [[q143BpeMerges]] (5 rounds, the oracle gate), [[q147BpeEncode]]
+    * and BpeLocalSpec's parity check against [[bpeTrainLocal]] share ONE
+    * implementation. Each round's dictionary is cached and registered
+    * for the harness sweep.
     */
-  private[graft] def bpeTrain(
-      spark: SparkSession, dir: String, nRounds: Int, audit: Boolean = false,
-      onRound: (Int, String, String, Long, Double, Long) => Unit =
-        (_, _, _, _, _, _) => ())
+  private[graft] def bpeTrain(spark: SparkSession, dir: String, nRounds: Int)
       : Seq[(Int, String, String, String, Long)] = {
     val D = "\u001f" // unit separator: absent from any token
     val vocab = Tables.documents(spark, dir)
@@ -1997,16 +1983,10 @@ object TextOps {
         array_join(expr("filter(split(w, ''), c -> c <> '')"), D + D), lit(D)))
       .select(col("cnt"), col("seq"))
       .cache().transform(graft.util.Checkpoints.track) // round 0 of the loop below
-    // weighted symbol count: each round must shrink it by exactly freq
-    def symCount(df: DataFrame): Long = df
-      .agg(sum(col("cnt") * size(split(col("seq"), D + D)).cast("long")).as("s"))
-      .collect()(0).getLong(0)
     var cur = vocab
-    var prevSyms = if (audit) symCount(vocab) else 0L
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, String, Long)]()
     var exhausted = false // a vocab can run out of pairs before nRounds
     for (r <- 1 to nRounds if !exhausted) {
-      val t0 = System.nanoTime()
       val pairs = cur
         .select(col("cnt"), explode(expr(
           s"""flatten(transform(array(filter(split(substring(seq, 2, length(seq) - 2), '$D$D'), s -> s <> '')), ss ->
@@ -2024,34 +2004,12 @@ object TextOps {
         merges += ((r, a, b, a + b, freq))
         // lit() args, not SQL literals: a symbol containing a quote or
         // backslash must never be able to break the expression
-        val nextPlan = cur.withColumn("seq",
+        cur = cur.withColumn("seq",
           org.apache.spark.sql.functions.replace(col("seq"),
             lit(D + a + D + D + b + D), lit(D + a + b + D)))
-        // audit (depth) mode TRUNCATES lineage every round: a cached
-        // chain keeps the full replace tree in every subsequent logical
-        // plan, and Catalyst re-analyzes + canonicalizes that O(r) tree
-        // each round -- measured super-linear at sf10 (10.3 / 21.2 /
-        // 55.0 / 188.8 s at rounds 14-17) before this was a
-        // localCheckpoint. With truncation each round's plan is
-        // constant-size (LogicalRDD -> one replace) and per-round cost
-        // is dictionary-bound, which is what makes a deep-merge regime
-        // viable at all.
-        val next = if (audit) nextPlan.localCheckpoint(true) else nextPlan.cache()
-        if (audit) {
-          val syms = symCount(next) // reads the checkpointed rows
-          require(prevSyms - syms == freq,
-            s"round $r: symbol count dropped ${prevSyms - syms}, merged freq is $freq")
-          prevSyms = syms
-          graft.util.Checkpoints.release(cur) // bounded memory at depth
-          onRound(r, a, b, freq, (System.nanoTime() - t0) / 1e9, syms)
-        } else {
-          graft.util.Checkpoints.track(next) // harness-swept, as before
-          ()
-        }
-        cur = next
+          .cache().transform(graft.util.Checkpoints.track) // harness-swept
       }
     }
-    if (audit) graft.util.Checkpoints.release(cur)
     merges.toSeq
   }
 
@@ -2063,8 +2021,8 @@ object TextOps {
     * kilobytes. This is the same loop — IDENTICAL pair-count semantics
     * (every adjacent position, overlapping included) and merge
     * semantics (left-to-right non-overlapping) — run in-process;
-    * BpeLocalSpec + BpeDepth assert merge-table parity with the Spark
-    * rounds on the shared prefix. Tie-break order is freq DESC, then
+    * BpeLocalSpec asserts merge-table parity with the Spark rounds on
+    * the shared prefix. Tie-break order is freq DESC, then
     * (a, b) ascending by UTF-8 BYTES, matching Spark/DuckDB string
     * ordering (Java String.compareTo is UTF-16 code-unit order, which
     * diverges for supplementary characters).

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.VectorExpressions
 import graft.sources.Tables
+import graft.util.Md5
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, dim 64).
   *
@@ -416,9 +417,7 @@ object VectorOps {
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
       .sortBy(_.getPath.getName)
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + "|" + parts.mkString(",")).getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
+    Md5.hex(dir + "|" + parts.mkString(","))
   }
 
   /** On-disk IVF index store (VERDICT-r7 #2). Artifacts live under

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.plans.ZoneMapScanSwap
+import graft.util.Md5
 
 /** q176 — the z-layout behind a PLAIN SQL catalog table: the round-13
   * FileIndex integration (q175) made any DataFrame predicate skip
@@ -31,14 +32,10 @@ import graft.plans.ZoneMapScanSwap
   * pruning, and the zone map never leaves the driver. */
 object ZCatalog {
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Catalog table name for a corpus's z-layout (spec surface) — the
     * per-corpus id8 suffix follows the stats-catalog convention. */
   private[graft] def zTableName(dir: String, t: ZTable): String =
-    s"graft_z_${t.name}_${md5hex(dir).take(8)}"
+    s"graft_z_${t.name}_${Md5.hex(dir).take(8)}"
 
   /** Land the layout, create the catalog table (TBLPROPERTIES carry
     * the durable registration record), arm the scan-swap rule

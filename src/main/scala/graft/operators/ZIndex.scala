@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 import graft.plans.{AllNullZone, ColZone, DecimalZone, DoubleZone, KeepAllZone,
   LongZone, StringZone, ZoneFile, ZoneMapFileIndex}
 import graft.sources.Tables
+import graft.util.Md5
 
 /** A table's z-layout contract: where its feed lives, how to load the
   * corpus, which two dimensions drive the Morton clustering, and how
@@ -151,17 +152,13 @@ object ZIndex {
   private val rootLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   private[graft] def root(spark: SparkSession, dir: String, t: ZTable): String =
     t.rootOverride.getOrElse(
       spark.conf.getOption("spark.graft.zindex.dir") match {
         case Some(base) if t.name == "lineitem" => base // spec back-compat
         case Some(base) => s"$base/${t.name}"
         case None => sys.props("java.io.tmpdir") +
-          s"/graft_zindex2/${t.name}_${md5hex(dir)}"
+          s"/graft_zindex2/${t.name}_${Md5.hex(dir)}"
       })
 
   // file-identity listing shared with every derived artifact

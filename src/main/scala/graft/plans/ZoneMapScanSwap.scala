@@ -96,10 +96,6 @@ object ZoneMapScanSwap extends Rule[LogicalPlan] {
     ()
   }
 
-  /** Spec observable: the registered factory for a contract name. */
-  private[graft] def contractFor(name: String)
-      : Option[(SparkSession, String) => ZTable] = Option(contracts.get(name))
-
   // built-in contracts of this package (weather gold contracts register
   // from graft.weather.WeatherZServe's initializer; [[arm]] force-loads
   // the provider on a miss so a cold session needs no prior call)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
+import graft.util.Md5
 
 /** Structured-Streaming face of the engine. The reference "streams" via
   * cron micro-batches (6h ingest / hourly transform,
@@ -305,11 +306,8 @@ object EventsStream {
   // ---- q173: the statistics catalog planning a STREAMING join ---------
 
   /** Catalog table name for the customer dim of a corpus (spec surface). */
-  private[graft] def custDimTable(dir: String): String = {
-    val id8 = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-    s"graft_cust_dim_$id8"
-  }
+  private[graft] def custDimTable(dir: String): String =
+    s"graft_cust_dim_${Md5.hex(dir).take(8)}"
 
   /** (shared catalog, corpus) → customer source stamp at last honest
     * injection — the [[graft.weather.WeatherStats]] memo discipline. A

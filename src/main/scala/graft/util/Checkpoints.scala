@@ -30,7 +30,7 @@ object Checkpoints {
   // inflation of round 5 (q81 63.5 s in-suite vs 5.65 s isolated). Sites
   // that mint such a frame register it here; the harness (Bench/Verify)
   // sweeps between queries, AFTER the query's result is materialized.
-  // The registry is ARMED only by harness mains (Bench/Verify call
+  // The registry is ARMED only by harness mains (`Harness.session` calls
   // [[arm]] at startup). A library caller that never sweeps must not
   // feed it: strong references here would pin every transient for the
   // process lifetime in a long-lived service (the pre-registry lifecycle

@@ -2,8 +2,9 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Between-query hygiene for the one-JVM harness runs (Bench/Verify run
-  * 90+ queries in a single session). Round-5 measurement: with end-only
+/** The harness mains' shared session, query selection and teardown, plus
+  * between-query hygiene for the one-JVM runs (Bench/Verify run 90+
+  * queries in a single session). Round-5 measurement: with end-only
   * teardown, late-suite queries inherit the whole suite's debris — leaked
   * localCheckpoint blocks, loaded streaming state-store providers (each
   * holding its state map on heap), un-reaped shuffle files/broadcasts —
@@ -14,6 +15,68 @@ import org.apache.spark.sql.SparkSession
   * index, IVF centroids) are NOT touched.
   */
 object Harness {
+
+  /** The one session profile of the harness mains (Bench, Verify, RunOne,
+    * Explain, ScaleUp): `local[SPARK_GRAFT_CPUS]` (default `defaultCpus`),
+    * `SPARK_GRAFT_SHUFFLE` shuffle partitions (default the core count —
+    * partitions track the data, not the cores: the sf10 replica measured
+    * q44/q45 spilling at 32), UTC, UI off with small status-store
+    * retention, WARN logging, [[quietLineageWarn]] and the armed
+    * [[Checkpoints]] registry. `confs` are applied last, so a caller's
+    * `k=v` arguments override the profile.
+    */
+  def session(defaultCpus: Int, confs: Seq[(String, String)] = Nil)
+      : SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions",
+        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // UI is off but the status stores still retain per-execution plan
+      // graphs/metrics; 90+ queries of big plans is real heap — keep the
+      // retention small, no harness reads them back
+      .config("spark.sql.ui.retainedExecutions", "20")
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+    confs.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    quietLineageWarn() // deliberate releases, see below
+    Checkpoints.arm() // harness-only transient registry
+    spark
+  }
+
+  /** Parse a `k=v` Spark conf argument (RunOne, Explain). */
+  def confArg(kv: String): (String, String) = kv.split("=", 2) match {
+    case Array(k, v) => (k, v)
+    case _ => throw new IllegalArgumentException(
+      s"expected a k=v Spark conf argument, got '$kv'")
+  }
+
+  /** The query filter of `SPARK_GRAFT_ONLY="q78,q46"` (unset or blank →
+    * every query): a qNN prefix OR a full name matches; a bare
+    * startsWith would over-select now that three-digit queries exist
+    * ("q11" must not pull in q110+).
+    */
+  def selection(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : String => Boolean = {
+    val names = only.toSeq.flatMap(_.split(",")).map(_.trim)
+      .filter(_.nonEmpty).toSet
+    name => names.isEmpty || names(name) || names(name.split("_")(0))
+  }
+
+  /** End-of-run teardown: evict the memoized/cached frames so nothing
+    * outlives the run. */
+  def teardown(spark: SparkSession): Unit = {
+    graft.weather.WeatherQueries.clear()
+    graft.operators.IngestOps.clear()
+    graft.operators.TextOps.clear()
+    graft.operators.VectorOps.clear()
+    graft.operators.Relational.clearGraph()
+    spark.catalog.clearCache()
+  }
 
   /** Run after a query's result is fully materialized (counted/written). */
   def sweep(spark: SparkSession): Unit = {

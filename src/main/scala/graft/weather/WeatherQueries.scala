@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.Bronze
+import graft.util.Md5
 
 /** Driver-contract wiring for the weather pipeline: each stage of
   * SURVEY §3.1's lifecycle as an oracled query over the synth weather
@@ -64,8 +65,7 @@ object WeatherQueries {
       .toAbsolutePath.toString
 
   private[graft] def bronzePath(d: String): String = {
-    val md5 = java.security.MessageDigest.getInstance("MD5")
-      .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    val md5 = Md5.hex(d).take(8)
     s"$bronzeRoot/${d.replaceAll("[^A-Za-z0-9._-]", "_")}_$md5/events"
   }
 

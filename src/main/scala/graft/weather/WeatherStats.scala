@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.{JoinSynopsis, SynopsisStats}
+import graft.util.Md5
 
 /** The FLAGSHIP pipeline as a consumer of the statistics catalog (r11
   * verdict #6): the gold build's J1 (staging ⋈ stations) and J2
@@ -56,11 +57,7 @@ object WeatherStats {
     * as the CacheManager lesson on memoized frames). */
   def clearMemo(): Unit = dimMemo.clear()
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def id8(d: String): String = md5hex(d).take(8)
+  private def id8(d: String): String = Md5.hex(d).take(8)
 
   /** File-identity stamp of the dims' SOURCE tables (customer feeds
     * stations, nation feeds postal — [[WeatherSynth]]): two RPC-cheap
@@ -85,7 +82,7 @@ object WeatherStats {
       if (Option(dimMemo.get(memoKey)).contains(stamp) &&
           s.catalog.tableExists(stTbl) && s.catalog.tableExists(pcTbl))
         return (s.table(stTbl), s.table(pcTbl))
-      val root = s"$dimRoot/${id8(d)}/${md5hex(stamp).take(8)}"
+      val root = s"$dimRoot/${id8(d)}/${Md5.hex(stamp).take(8)}"
       if (!landed(root)) {
         // stamp-addressed: a regenerated corpus lands to a NEW dir (the
         // old one stays — a concurrent session's analyzed frames may

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{KmvTable, Layout, ZIndex, ZTable}
 import graft.plans.ZoneMapFileIndex
+import graft.util.Md5
 
 /** The weather SERVE path riding the z-skipping layer: gold — the
   * table every API read hits — landed once per corpus as a durable
@@ -73,10 +74,6 @@ object WeatherZServe {
   private[graft] def clearLanded(): Unit =
     landed.synchronized { landed.clear() }
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Gold's full upstream identity: the weather feed plus both dim
     * sources (stations ← customer, postal ← nation). */
   private def sourceStamp(s: SparkSession, d: String): String =
@@ -84,18 +81,23 @@ object WeatherZServe {
       .map(t => KmvTable.stampOfPath(s, s"$d/$t"))
       .mkString("\n--\n")
 
+  /** The stamp-addressed gold landing path for this corpus. */
+  private def goldPath(s: SparkSession, d: String): String =
+    s"${goldRoot(s)}/${Md5.hex(d).take(8)}/" +
+      s"${Md5.hex(sourceStamp(s, d)).take(8)}/gold.parquet"
+
   /** The committed landing for this corpus stamp, if one already exists
     * on the durable root — a marker PROBE only, never a build (so
     * [[WeatherQueries]]' gold builders can serve from it without the
     * circularity of triggering the landing that computes them). Returns
     * None on a cold root; the probe costs three source-stamp footer
-    * reads plus one FS exists, KB-scale driver metadata. */
+    * reads plus one FS exists, KB-scale driver metadata. The root is
+    * durable: a COMPLETE landing from a prior JVM (parquet's own
+    * `_SUCCESS` commit marker) counts; a crash leftover does not. */
   private[weather] def committedGoldPath(
       s: SparkSession, d: String): Option[String] =
     landed.synchronized {
-      val stamp = sourceStamp(s, d)
-      val path = s"${goldRoot(s)}/${md5hex(d).take(8)}/" +
-        s"${md5hex(stamp).take(8)}/gold.parquet"
+      val path = goldPath(s, d)
       if (landed(path)) Some(path)
       else {
         val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
@@ -105,29 +107,20 @@ object WeatherZServe {
     }
 
   /** Land the unified gold (observations + forecasts — the reference's
-    * single `weather_data_gold` table) once per (JVM, corpus stamp);
-    * returns the landed parquet path. The write is one pass over the
+    * single `weather_data_gold` table) once per corpus stamp; returns the
+    * landed parquet path. Only an uncommitted root is written (a crash
+    * leftover is overwritten whole); the write is one pass over the
     * already-memoized gold frames. */
   private def landedGold(s: SparkSession, d: String): String =
     landed.synchronized {
-      val stamp = sourceStamp(s, d)
-      val dir =
-        s"${goldRoot(s)}/${md5hex(d).take(8)}/${md5hex(stamp).take(8)}"
-      val path = s"$dir/gold.parquet"
-      if (!landed(path)) {
-        // the root is durable: a COMPLETE landing from a prior JVM
-        // (parquet's own `_SUCCESS` commit marker) is reused as-is; a
-        // crash leftover (no marker) is overwritten whole
-        val marker = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
-        val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) {
-          landWrites.incrementAndGet()
-          WeatherQueries.goldUnified(s, d)
-            .write.mode("overwrite").parquet(path)
-        }
+      committedGoldPath(s, d).getOrElse {
+        val path = goldPath(s, d)
+        landWrites.incrementAndGet()
+        WeatherQueries.goldUnified(s, d)
+          .write.mode("overwrite").parquet(path)
         landed += path
+        path
       }
-      path
     }
 
   /** Gold's layout contract, ONE LAYOUT PER data_type (the
@@ -166,7 +159,7 @@ object WeatherZServe {
       // resolve into — and rebuild across — the other suite's temp
       // root); stable per (corpus dir, data_type) within the JVM
       rootOverride = Some(
-        s"${goldRoot(s)}/${md5hex(d).take(8)}/z_${which.take(3)}"))
+        s"${goldRoot(s)}/${Md5.hex(d).take(8)}/z_${which.take(3)}"))
   }
 
   /** The UNIFIED gold layout — the reference's single
@@ -195,7 +188,7 @@ object WeatherZServe {
         half(df, "observation", "timestamp", math.max(1, n / 2))
           .unionByName(half(df, "forecast", "forecast_timestamp",
             math.max(1, n - n / 2)))),
-      rootOverride = Some(s"${goldRoot(s)}/${md5hex(d).take(8)}/z_all"))
+      rootOverride = Some(s"${goldRoot(s)}/${Md5.hex(d).take(8)}/z_all"))
   }
 
   /** The DAILY-ROLLUP layout (r15 verdict #3's consumer): unified gold
@@ -217,7 +210,7 @@ object WeatherZServe {
         graft.operators.Layout.partitionPureBy(
           df, Seq("data_type", "day"))),
       prep = Some(df => df.withColumn("day", to_date(col("timestamp")))),
-      rootOverride = Some(s"${goldRoot(s)}/${md5hex(d).take(8)}/z_daily"))
+      rootOverride = Some(s"${goldRoot(s)}/${Md5.hex(d).take(8)}/z_daily"))
 
   /** q187 — the MULTI-KEY grouped metadata serve (r15 verdict #3): the
     * daily layer report — `GROUP BY data_type, day` — over the
